@@ -54,13 +54,20 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", {
         val inputBytes = try {
           import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(java.nio.file.Paths.get(
+          val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(
             sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")))
-            .iterator().asScala
+          try walk.iterator().asScala
             .filter(p => p.toString.endsWith(".parquet") &&
               java.nio.file.Files.isRegularFile(p))
             .map(java.nio.file.Files.size).sum
-        } catch { case _: Exception => 0L }
+          finally walk.close()
+        } catch {
+          case e: Exception =>
+            System.err.println("[bench] cannot size the SPARK_GRAFT_SF_DIR " +
+              s"input (${e.getClass.getSimpleName}: ${e.getMessage}) — " +
+              "shuffle partitions fall back to the core count")
+            0L
+        }
         math.max(cpus.toInt,
           (inputBytes * 4L / (64L * 1024 * 1024)).toInt).toString
       })

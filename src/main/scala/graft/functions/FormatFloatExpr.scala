@@ -10,20 +10,34 @@ import org.apache.spark.unsafe.types.UTF8String
 /** JVM implementation of the reference's R4 float formatting
   * (etl_job.py:810-844): `%.15g`, fixed-notation fallback when
   * scientific appears, trailing zeros stripped, lowercase nan/inf.
+  * Python formats the EXACT binary value, correctly rounded (half-even
+  * on ties), so this does too: Java's `%.15g` / `%.15f` start from the
+  * shortest repr instead, which double-rounds (556.4543226524335 →
+  * …434, Python …433) and pads big values with zeros (6.02214076e23 →
+  * 602214076000000000000000, Python 602214075999999987023872).
   * Standalone object (not a companion) so the compiler emits a static
   * forwarder Janino-generated code can call directly.
   */
 object FloatFormat {
+  private val Sig15 =
+    new java.math.MathContext(15, java.math.RoundingMode.HALF_EVEN)
+
   def format(v: Double): UTF8String = UTF8String.fromString(formatString(v))
 
   def formatString(v: Double): String = {
     if (java.lang.Double.isNaN(v)) return "nan"
     if (java.lang.Double.isInfinite(v)) return if (v > 0) "inf" else "-inf"
-    var s = String.format(java.util.Locale.ROOT, "%.15g", Double.box(v))
-    if (s.indexOf('e') >= 0 || s.indexOf('E') >= 0) {
-      s = String.format(java.util.Locale.ROOT, "%.15f", Double.box(v))
-    }
-    strip(s)
+    if (v == 0.0) return if (1.0 / v < 0) "-0" else "0"
+    val exact = new java.math.BigDecimal(v)
+    val g = exact.round(Sig15)
+    // Python's %g rule: the decimal exponent of the value rounded to
+    // 15 significant digits picks fixed (-4 <= exp < 15) or scientific
+    // notation — and scientific falls back to %.15f
+    val exp = g.precision - g.scale - 1
+    if (exp >= -4 && exp < 15) return strip(g.toPlainString)
+    val f = exact.setScale(15, java.math.RoundingMode.HALF_EVEN)
+    // BigDecimal has no -0: a negative value under 5e-16 renders "-0"
+    strip((if (f.signum == 0 && v < 0) "-" else "") + f.toPlainString)
   }
 
   private def strip(s: String): String = {

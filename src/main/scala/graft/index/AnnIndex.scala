@@ -1,14 +1,15 @@
 package graft.index
 
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
 
 import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** What an index directory claims to be — persisted as a 1-row parquet
-  * and validated on every serve/ensure. `nVectors` ties the index to a
-  * corpus SNAPSHOT's size; `corpusFp` (format v2) ties it to the
+  * and validated by ensure once per snapshot. `nVectors` ties the index
+  * to a corpus SNAPSHOT's size; `corpusFp` (format v2) ties it to the
   * snapshot's CONTENT — a corpus regenerated in place with the same row
   * count (exactly what fixture re-generation does) no longer silently
   * serves a stale index. */
@@ -65,6 +66,14 @@ object AnnIndex {
   val FormatVersion = 2
 
   private def p(root: String, part: String) = s"$root/$part"
+
+  /** Test hook: full [[ensure]] checks run in this JVM — one per
+    * snapshot, never one per served call. */
+  private[graft] val validations = new AtomicInteger(0)
+
+  /** Validated snapshots; AnnIndex has no shard split, so every entry's
+    * shardSource is "". */
+  private val snapshots = new IndexSnapshots[IndexMeta]("embeddings")
 
   /** Lloyd's k-means over the quantized corpus, returning the trained
     * coarse book (cell, qc, nc) — the production-grade alternative to
@@ -187,6 +196,7 @@ object AnnIndex {
     val meta = IndexMeta(FormatVersion, corpusDir, n, d, ivfK, pqM, pqK, fp)
     Seq(meta).toDS().toDF().coalesce(1)
       .write.mode("overwrite").parquet(p(root, "meta"))
+    snapshots.record(spark, root, corpusDir, "", meta)
     meta
   }
 
@@ -206,11 +216,20 @@ object AnnIndex {
       spark.read.parquet(p(root, "meta")).as[IndexMeta].collect().headOption
     } catch { case _: Exception => None }
 
+  /** The meta the serve paths run on: the validated snapshot's while
+    * the files still match it, else (a root never ensured in this JVM,
+    * or changed since) the one on disk. */
+  private def servedMeta(spark: SparkSession, root: String): IndexMeta =
+    snapshots.current(spark, root).map(_.meta).getOrElse {
+      val meta = readMeta(spark, root).getOrElse(throw new IllegalStateException(
+        s"AnnIndex: no readable index meta at $root — build with write() or ensure()"))
+      require(meta.formatVersion == FormatVersion,
+        s"AnnIndex: $root is format v${meta.formatVersion}, this build serves v$FormatVersion")
+      meta
+    }
+
   private def served(spark: SparkSession, root: String, part: String): DataFrame = {
-    val meta = readMeta(spark, root).getOrElse(throw new IllegalStateException(
-      s"AnnIndex: no readable index meta at $root — build with write() or ensure()"))
-    require(meta.formatVersion == FormatVersion,
-      s"AnnIndex: $root is format v${meta.formatVersion}, this build serves v$FormatVersion")
+    servedMeta(spark, root)
     spark.read.parquet(p(root, part))
   }
 
@@ -255,8 +274,7 @@ object AnnIndex {
     * search derives from its corpus count — identical post-build, and
     * re-sized only by the re-train that also re-sizes K. */
   def annSearch(spark: SparkSession, root: String): DataFrame = {
-    val meta = readMeta(spark, root).getOrElse(throw new IllegalStateException(
-      s"AnnIndex: no readable index meta at $root"))
+    val meta = servedMeta(spark, root)
     Similarity.ivfSearch(assignments(spark, root), meta.dim,
       Similarity.ivfSubBitsFor(meta.nVectors))
   }
@@ -267,8 +285,7 @@ object AnnIndex {
     * computed fresh from the query vectors, as a real serving path
     * does. */
   def adcSearch(spark: SparkSession, corpusDir: String, root: String): DataFrame = {
-    val meta = readMeta(spark, root).getOrElse(throw new IllegalStateException(
-      s"AnnIndex: no readable index meta at $root"))
+    val meta = servedMeta(spark, root)
     val book = readCodebook(spark, root, meta)
     val codes = masked(spark, root,
       served(spark, root, "codes")).select(col("vec_id"), col("code"))
@@ -358,7 +375,12 @@ object AnnIndex {
   def queryTiers(spark: SparkSession, root: String, queries: DataFrame,
       tiers: Seq[Int], k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    require(tiers.nonEmpty && tiers.forall(_ >= 1))
+    require(tiers.nonEmpty && tiers.forall(_ >= 1),
+      s"AnnIndex.queryTiers: tiers must be a nonempty list of nprobe >= 1, got $tiers")
+    // a repeated tier would put two copies of each candidate in one
+    // (query_id, np) ranking and corrupt that tier's top-k
+    require(tiers.distinct.size == tiers.size,
+      s"AnnIndex.queryTiers: duplicate tiers in $tiers")
     val maxNp = tiers.max
     val q = queries.select(col("query_id"),
       transform(col("embedding"),
@@ -451,6 +473,7 @@ object AnnIndex {
         .withColumn("crn", row_number().over(w))
         .filter(col("crn") === 1)
         .select(col("vec_id"), col("cell"), col("q"), col("nrm"), col("ccos"))
+      snapshots.drop(root)
       assigned.write.mode("append").parquet(p(root, "assignments"))
       // encode the batch against the persisted codebook (ADC parity with
       // the build path: same first-minimum tie rule)
@@ -508,8 +531,10 @@ object AnnIndex {
         case None => ids
       }
       val freshN = fresh.count()
-      if (freshN > 0)
+      if (freshN > 0) {
+        snapshots.drop(root)
         fresh.write.mode("append").parquet(p(root, "tombstones"))
+      }
       freshN
     } finally ids.unpersist()
   }
@@ -557,6 +582,7 @@ object AnnIndex {
         require(fs.rename(next, cur),
           s"AnnIndex: vacuum rename failed for $part at $root")
       }
+      snapshots.drop(root)
       swap("assignments")
       swap("codes")
       val nAsg = spark.read.parquet(p(root, "assignments")).count()
@@ -590,23 +616,31 @@ object AnnIndex {
     * matching the reference's idempotent-reload story. Uses the NAIVE
     * book (the grade whose results are oracle-identical to q_ann_ivf);
     * a corpus the naive seed cannot cover propagates [[write]]'s
-    * refusal — deploy such corpora through [[writeTrained]]. */
+    * refusal — deploy such corpora through [[writeTrained]]. The
+    * checks run once per snapshot of the corpus and root files
+    * ([[IndexSnapshots]]); an unchanged snapshot returns without a
+    * Spark job. */
   def ensure(spark: SparkSession, corpusDir: String,
       root0: String = null): String = {
     val root = Option(root0).getOrElse(defaultRoot(corpusDir))
     val lock = ensuring.computeIfAbsent(root, _ => new AnyRef)
     lock.synchronized {
-      readMeta(spark, root) match {
-        case Some(m) if m.formatVersion > FormatVersion =>
-          throw new IllegalStateException(
-            s"AnnIndex: $root is format v${m.formatVersion} (newer than " +
-              s"v$FormatVersion) — refusing to overwrite")
-        case Some(m) if m.formatVersion == FormatVersion &&
-            m.corpusDir == corpusDir &&
-            m.nVectors == Similarity.indexGeometry(spark, corpusDir)._5 &&
-            m.corpusFp == Similarity.corpusFingerprint(spark, corpusDir) =>
-          () // valid — serve as-is
-        case _ => write(spark, corpusDir, root)
+      val tok = snapshots.token(spark, corpusDir, root)
+      if (!snapshots.holds(root, corpusDir, "", tok)) {
+        validations.incrementAndGet()
+        readMeta(spark, root) match {
+          case Some(m) if m.formatVersion > FormatVersion =>
+            throw new IllegalStateException(
+              s"AnnIndex: $root is format v${m.formatVersion} (newer than " +
+                s"v$FormatVersion) — refusing to overwrite")
+          case Some(m) if m.formatVersion == FormatVersion &&
+              m.corpusDir == corpusDir &&
+              m.nVectors == Similarity.indexGeometry(spark, corpusDir)._5 &&
+              m.corpusFp == Similarity.corpusFingerprint(spark, corpusDir) =>
+            // valid — serve as-is
+            snapshots.recordAt(root, tok, corpusDir, "", m)
+          case _ => write(spark, corpusDir, root)
+        }
       }
     }
     root

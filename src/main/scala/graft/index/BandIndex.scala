@@ -9,7 +9,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** What a band-index directory claims to be — persisted as a 1-row
-  * parquet and validated on every probe/ensure, the [[AnnIndex]]
+  * parquet and validated by ensure once per snapshot, the [[AnnIndex]]
   * `IndexMeta` device applied to the dedup band frame. `baseFp` is a
   * content fingerprint of the SETTLED corpus's signature frame, so a
   * base regenerated in place (same row count, new text) rebuilds
@@ -83,6 +83,18 @@ object BandIndex {
     * buckets (work ∝ shard, the whole point). */
   private[graft] val builds = new AtomicInteger(0)
 
+  /** Test hook: full [[ensure]] checks run in this JVM — one per
+    * snapshot, never one per served call. */
+  private[graft] val validations = new AtomicInteger(0)
+
+  private val snapshots = new IndexSnapshots[BandMeta]("documents")
+
+  /** The id of the snapshot `root` and the corpus are at now — the key
+    * for memos derived from a probe of this index. */
+  private[graft] def snapshotId(spark: SparkSession, corpusDir: String,
+      root: String): String =
+    snapshots.token(spark, corpusDir, root).id
+
   /** Default per-corpus index location (scratch space — a deployment
     * points `root` at its lake instead). */
   def defaultRoot(corpusDir: String): String =
@@ -133,9 +145,10 @@ object BandIndex {
     buckets.groupBy("band_id", "band_hash").agg(count(lit(1)).as("df"))
       .write.mode("overwrite").parquet(p(root, "sizes"))
     base.write.mode("overwrite").parquet(p(root, "sigs"))
-    writeMeta(spark, root, BandMeta(FormatVersion, corpusDir,
-      shardSource, base.count(), baseFingerprint(base),
-      postingCount(spark, root)))
+    val meta = BandMeta(FormatVersion, corpusDir, shardSource,
+      base.count(), baseFingerprint(base), postingCount(spark, root))
+    writeMeta(spark, root, meta)
+    snapshots.record(spark, root, corpusDir, shardSource, meta)
   }
 
   private def writeMeta(spark: SparkSession, root: String,
@@ -184,6 +197,7 @@ object BandIndex {
     // derived twice (append + sidecar counts) — bandedSig over the
     // materialized signature frame is cheap; no checkpoint blocks held
     val shardBuckets = Dedup.bandedSig(shard)
+    snapshots.drop(root)
     shardBuckets.write.mode("append").parquet(p(root, "buckets"))
     shard.write.mode("append").parquet(p(root, "sigs"))
     // algebraic sidecar merge, swapped in via the vacuum rename device
@@ -238,6 +252,7 @@ object BandIndex {
     * `buckets/`, work ∝ |postings|, base text and signatures untouched. */
   private def rebuildSizes(spark: SparkSession, root: String): Unit = {
     sizeRepairs.incrementAndGet()
+    snapshots.drop(root)
     spark.read.parquet(p(root, "buckets"))
       .groupBy("band_id", "band_hash").agg(count(lit(1)).as("df"))
       .write.mode("overwrite").parquet(p(root, "sizes"))
@@ -247,42 +262,49 @@ object BandIndex {
     * holding VALID base buckets for `corpusDir`, building only when the
     * existing ones are missing or stale (version / corpus / base count /
     * content fingerprint). A root claiming a NEWER format is a hard
-    * error, never clobbered. */
+    * error, never clobbered. The checks run once per snapshot of the
+    * corpus and root files ([[IndexSnapshots]]); an unchanged snapshot
+    * returns without a Spark job. */
   def ensure(spark: SparkSession, corpusDir: String,
       root0: String = null,
       shardSource: String = Dedup.newShardSource): String = {
     val root = Option(root0).getOrElse(defaultRoot(corpusDir))
     val lock = ensuring.computeIfAbsent(root, _ => new AnyRef)
     lock.synchronized {
-      readMeta(spark, root) match {
-        case Some(m) if m.formatVersion > FormatVersion =>
-          throw new IllegalStateException(
-            s"BandIndex: $root is format v${m.formatVersion} (newer than " +
-              s"v$FormatVersion) — refusing to overwrite")
-        case Some(m) if m.formatVersion == FormatVersion &&
-            m.corpusDir == corpusDir && m.shardSource == shardSource && {
-              // an unreadable buckets/ (partial deletion, corruption)
-              // must read as STALE → rebuild, exactly like every other
-              // staleness case — readMeta already tolerates exceptions
-              // and this guard must too (ADVICE_r12)
-              try {
-                val base = baseSigs(spark, corpusDir, shardSource)
-                m.nBaseDocs == base.count() &&
-                  m.baseFp == baseFingerprint(base) &&
-                  // the persisted-postings pin (v3): a crash inside
-                  // append() (buckets landed, meta not rewritten) or any
-                  // over-inclusive buckets read as STALE here instead of
-                  // silently self-pairing on the next probe (ADVICE_r11)
-                  m.nPostings == postingCount(spark, root)
-              } catch { case scala.util.control.NonFatal(_) => false }
-            } =>
-          // valid — serve as-is, after the one cheap repair: a missing/
-          // unreadable `sizes/` sidecar (the append swap's crash window
-          // leaves delete-without-rename) recomputes from the persisted
-          // postings — ONE groupBy over `buckets/`, never a full corpus
-          // rebuild (VERDICT_r11 item 4)
-          if (!sizesReadable(spark, root)) rebuildSizes(spark, root)
-        case _ => write(spark, corpusDir, root, shardSource)
+      val tok = snapshots.token(spark, corpusDir, root)
+      if (!snapshots.holds(root, corpusDir, shardSource, tok)) {
+        validations.incrementAndGet()
+        readMeta(spark, root) match {
+          case Some(m) if m.formatVersion > FormatVersion =>
+            throw new IllegalStateException(
+              s"BandIndex: $root is format v${m.formatVersion} (newer than " +
+                s"v$FormatVersion) — refusing to overwrite")
+          case Some(m) if m.formatVersion == FormatVersion &&
+              m.corpusDir == corpusDir && m.shardSource == shardSource && {
+                // an unreadable buckets/ (partial deletion, corruption)
+                // must read as STALE → rebuild, exactly like every other
+                // staleness case — readMeta already tolerates exceptions
+                // and this guard must too (ADVICE_r12)
+                try {
+                  val base = baseSigs(spark, corpusDir, shardSource)
+                  m.nBaseDocs == base.count() &&
+                    m.baseFp == baseFingerprint(base) &&
+                    // the persisted-postings pin (v3): a crash inside
+                    // append() (buckets landed, meta not rewritten) or any
+                    // over-inclusive buckets read as STALE here instead of
+                    // silently self-pairing on the next probe (ADVICE_r11)
+                    m.nPostings == postingCount(spark, root)
+                } catch { case scala.util.control.NonFatal(_) => false }
+              } =>
+            // valid — serve as-is, after the one cheap repair: a missing/
+            // unreadable `sizes/` sidecar (the append swap's crash window
+            // leaves delete-without-rename) recomputes from the persisted
+            // postings — ONE groupBy over `buckets/`, never a full corpus
+            // rebuild (VERDICT_r11 item 4)
+            snapshots.recordAt(root, tok, corpusDir, shardSource, m)
+            if (!sizesReadable(spark, root)) rebuildSizes(spark, root)
+          case _ => write(spark, corpusDir, root, shardSource)
+        }
       }
     }
     root
@@ -345,8 +367,10 @@ object BandIndex {
         case None => ids
       }
       val freshN = fresh.count()
-      if (freshN > 0)
+      if (freshN > 0) {
+        snapshots.drop(root)
         fresh.write.mode("append").parquet(p(root, "tombstones"))
+      }
       freshN
     } finally ids.unpersist()
   }
@@ -392,6 +416,7 @@ object BandIndex {
         require(fs.rename(next, cur),
           s"BandIndex: vacuum rename failed for $part at $root")
       }
+      snapshots.drop(root)
       swap("buckets")
       swap("sigs")
       rebuildSizes(spark, root)

@@ -46,6 +46,12 @@ object FpIndex {
   /** Test hook: actual builds in this JVM (the reuse proof). */
   private[graft] val builds = new AtomicInteger(0)
 
+  /** Test hook: full [[ensure]] checks run in this JVM — one per
+    * snapshot, never one per served call. */
+  private[graft] val validations = new AtomicInteger(0)
+
+  private val snapshots = new IndexSnapshots[FpMeta]("documents")
+
   def defaultRoot(corpusDir: String): String =
     sys.props("java.io.tmpdir").stripSuffix("/") + "/graft_fp_index/" +
       corpusDir.replaceAll("[^A-Za-z0-9._-]", "_")
@@ -91,8 +97,10 @@ object FpIndex {
       // against), not from the just-written artifact — fingerprinting
       // the index against itself would be circular and a base
       // regenerated in place would serve stale verdicts forever
-      writeMeta(spark, root, FpMeta(FormatVersion, corpusDir, shardSource,
-        nBase, contentFingerprint(fps), fpCount(spark, root)))
+      val meta = FpMeta(FormatVersion, corpusDir, shardSource,
+        nBase, contentFingerprint(fps), fpCount(spark, root))
+      writeMeta(spark, root, meta)
+      snapshots.record(spark, root, corpusDir, shardSource, meta)
     } finally base.unpersist()
   }
 
@@ -116,35 +124,42 @@ object FpIndex {
 
   /** The deployment contract ([[BandIndex.ensure]]'s): serve a valid
     * index untouched, rebuild missing/stale/corrupt, refuse to clobber
-    * a newer format. */
+    * a newer format. The checks run once per snapshot of the corpus
+    * and root files ([[IndexSnapshots]]); an unchanged snapshot
+    * returns without a Spark job. */
   def ensure(spark: SparkSession, corpusDir: String,
       root0: String = null,
       shardSource: String = Dedup.newShardSource): String = {
     val root = Option(root0).getOrElse(defaultRoot(corpusDir))
     val lock = ensuring.computeIfAbsent(root, _ => new AnyRef)
     lock.synchronized {
-      readMeta(spark, root) match {
-        case Some(m) if m.formatVersion > FormatVersion =>
-          throw new IllegalStateException(
-            s"FpIndex: $root is format v${m.formatVersion} (newer than " +
-              s"v$FormatVersion) — refusing to overwrite")
-        case Some(m) if m.formatVersion == FormatVersion &&
-            m.corpusDir == corpusDir && m.shardSource == shardSource && {
-              // unreadable artifacts read as stale → rebuild
-              // (the ADVICE_r12 BandIndex guard contract)
-              try {
-                m.nBaseDocs == Dedup.normFps(spark, corpusDir)
-                  .filter(col("source") =!= shardSource).count() &&
-                  // the torn-append pin: persisted row count vs meta
-                  m.nFps == fpCount(spark, root) &&
-                  // regeneration check: the fingerprint re-derives
-                  // from the CORPUS, never from the persisted artifact
-                  // (which would compare the index against itself)
-                  m.contentFp == contentFingerprint(
-                    baseFps(spark, corpusDir, shardSource))
-              } catch { case scala.util.control.NonFatal(_) => false }
-            } => // valid — serve as-is
-        case _ => write(spark, corpusDir, root, shardSource)
+      val tok = snapshots.token(spark, corpusDir, root)
+      if (!snapshots.holds(root, corpusDir, shardSource, tok)) {
+        validations.incrementAndGet()
+        readMeta(spark, root) match {
+          case Some(m) if m.formatVersion > FormatVersion =>
+            throw new IllegalStateException(
+              s"FpIndex: $root is format v${m.formatVersion} (newer than " +
+                s"v$FormatVersion) — refusing to overwrite")
+          case Some(m) if m.formatVersion == FormatVersion &&
+              m.corpusDir == corpusDir && m.shardSource == shardSource && {
+                // unreadable artifacts read as stale → rebuild
+                // (the ADVICE_r12 BandIndex guard contract)
+                try {
+                  m.nBaseDocs == Dedup.normFps(spark, corpusDir)
+                    .filter(col("source") =!= shardSource).count() &&
+                    // the torn-append pin: persisted row count vs meta
+                    m.nFps == fpCount(spark, root) &&
+                    // regeneration check: the fingerprint re-derives
+                    // from the CORPUS, never from the persisted artifact
+                    // (which would compare the index against itself)
+                    m.contentFp == contentFingerprint(
+                      baseFps(spark, corpusDir, shardSource))
+                } catch { case scala.util.control.NonFatal(_) => false }
+              } => // valid — serve as-is
+            snapshots.recordAt(root, tok, corpusDir, shardSource, m)
+          case _ => write(spark, corpusDir, root, shardSource)
+        }
       }
     }
     root
@@ -266,6 +281,7 @@ object FpIndex {
             "the live base or would over-subtract its counts — " +
             "refusing the retraction (the caller's bookkeeping would " +
             "drift)")
+        snapshots.drop(root)
         fresh.write.mode("append").parquet(p(root, "tombstones"))
         freshN
       } finally fresh.unpersist()
@@ -299,6 +315,7 @@ object FpIndex {
       val fs = new org.apache.hadoop.fs.Path(root)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val tfp = tombFingerprint(t)
+      snapshots.drop(root)
       if (!appliedMarker(spark, root).contains(tfp)) {
         // liveFps sees (tombstones, no matching marker) → the masked
         // view; materialize it as the new fps/
@@ -360,6 +377,7 @@ object FpIndex {
       .groupBy("fp").agg(sum("n_base").as("n_base"))
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    snapshots.drop(root)
     merged.write.mode("overwrite").parquet(p(root, "fps.next"))
     fs.delete(new org.apache.hadoop.fs.Path(p(root, "fps")), true)
     require(fs.rename(new org.apache.hadoop.fs.Path(p(root, "fps.next")),

@@ -2266,15 +2266,22 @@ object Dedup {
     crossProbeM(spark, dir)
 
   /** The shard-probe verdict frame materialized once per (session,
-    * dir) — r15, guide §2.4: [[qContamDelta]] rides [[qCrossNeardup]]'s
-    * output, so the whole probe (shard signature build + posting join +
-    * estimate) ran TWICE per sweep. Boundedness: one row per candidate
-    * pair, and candidates are hot-bucket-capped at probe time (the
-    * BandIndex v2 contract) — shard-linear, never corpus-quadratic. */
-  private def crossProbeM(spark: SparkSession, dir: String): DataFrame =
-    materializeOnce(spark, dir, "cross_probe")(
-      graft.index.BandIndex.probe(spark, dir,
-        graft.index.BandIndex.ensure(spark, dir)))
+    * dir, index snapshot) — r15, guide §2.4: [[qContamDelta]] rides
+    * [[qCrossNeardup]]'s output, so the whole probe (shard signature
+    * build + posting join + estimate) ran TWICE per sweep. The tag
+    * carries the BandIndex snapshot id, so an in-session append,
+    * delete or vacuum (or a rebuild by ensure) re-probes instead of
+    * serving the old verdicts; a superseded frame is left for
+    * `MaterializeOnce.releaseSession`, since a consumer may still hold
+    * it. Boundedness: one row per candidate pair, and candidates are
+    * hot-bucket-capped at probe time (the BandIndex v2 contract) —
+    * shard-linear, never corpus-quadratic. */
+  private def crossProbeM(spark: SparkSession, dir: String): DataFrame = {
+    val root = graft.index.BandIndex.ensure(spark, dir)
+    val snap = graft.index.BandIndex.snapshotId(spark, dir, root)
+    materializeOnce(spark, dir, s"cross_probe@$snap")(
+      graft.index.BandIndex.probe(spark, dir, root))
+  }
 
   /** q_cross_dedup_served — the exact-dedup verdict SERVED from the
     * PERSISTED fingerprint table ([[graft.index.FpIndex]], r13 — the

@@ -58,6 +58,25 @@ class FrameGuardSpec extends AnyFunSuite {
   private val simSrc = "src/main/scala/graft/operators/Similarity.scala"
   private val bandIdxSrc = "src/main/scala/graft/index/BandIndex.scala"
 
+  /** The cross_probe bound: the frame holds one row per candidate pair,
+    * capped upstream by the BandIndex probe-time hot-bucket cap. A
+    * consumer keeps that bound when it reads the frame once, never
+    * cross-joins, and joins only on a unique doc key (doc_id /
+    * base_doc — each frame row meets at most one row), so its output
+    * is at most the frame's size before any aggregation. */
+  private def docKeyedOnly(anchor: String)(block: String): Boolean = {
+    val joins = "\\.join\\(".r.findAllMatchIn(block).size
+    val docKeyed =
+      "Seq\\(\"(doc_id|base_doc)\"\\)\\)".r.findAllMatchIn(block).size
+    java.util.regex.Pattern.quote(anchor).r.findAllMatchIn(block).size == 1 &&
+      !block.contains("crossJoin") && joins == docKeyed
+  }
+
+  private val crossProbeGuard = "one read of the frame, no cross join, " +
+    "and every join on a unique doc key (Seq(\"doc_id\") or " +
+    "Seq(\"base_doc\")) — the frame is candidate-capped upstream by " +
+    "the BandIndex probe-time hot-bucket cap"
+
   private val frames = Seq(
     Frame("exact-Jaccard ngramPairs (Σ C(df,2) join — the sf10 killer)",
       Seq(dedupSrc), "ngramPairs(spark",
@@ -175,13 +194,30 @@ class FrameGuardSpec extends AnyFunSuite {
     Frame("cross-probe verdict frame dedup:cross_probe (shard-linear " +
       "by the BandIndex probe-time hot-bucket cap)",
       Seq(dedupSrc), "crossProbeM(spark",
-      // probe output is candidate-capped upstream (BandIndex v2);
-      // consumers aggregate or equi-join on doc ids
-      guardEvidence = _ => true,
-      guardDesc = "the BandIndex probe-time hot-bucket cap (upstream " +
-        "of the frame build)",
+      guardEvidence = docKeyedOnly("crossProbeM(spark"),
+      guardDesc = crossProbeGuard,
       selfNames = Set("crossProbeM"),
+      allDefs = true),
+    // q_cross_neardup IS the frame, so its consumers are the frame's
+    // too — the transitive-consumer omission class of `clusters`
+    Frame("cross-probe verdict frame via q_cross_neardup",
+      Seq(dedupSrc), "qCrossNeardup(spark",
+      guardEvidence = docKeyedOnly("qCrossNeardup(spark"),
+      guardDesc = crossProbeGuard,
+      selfNames = Set("q_cross_neardup"),
       allDefs = true))
+
+  test("the cross_probe guard is structural: it rejects a cross join, " +
+      "a self-join and a join on a non-doc key") {
+    val ok = docKeyedOnly("crossProbeM(spark") _
+    assert(ok("def qX(spark) = crossProbeM(spark, dir).join(docs, " +
+      "Seq(\"base_doc\")).groupBy(\"base_source\")"))
+    assert(!ok("def qX(spark) = crossProbeM(spark, dir).crossJoin(docs)"))
+    assert(!ok("def qX(spark) = crossProbeM(spark, dir).join(" +
+      "crossProbeM(spark, dir), Seq(\"doc_id\"))"))
+    assert(!ok("def qX(spark) = crossProbeM(spark, dir).join(docs, " +
+      "col(\"n_shared_bands\") === col(\"n\"))"))
+  }
 
   private val registered = SparkEntry.queries.keySet
 

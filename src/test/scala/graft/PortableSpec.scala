@@ -49,6 +49,28 @@ class PortableSpec extends SparkSpec {
     assert(evalDouble(formatFloat(col("v")), Double.NegativeInfinity) == "-inf")
   }
 
+  test("formatFloat renders the exact binary value, correctly rounded, " +
+      "like CPython (no shortest-repr padding, no double rounding)") {
+    // expectations from CPython: f"{v:.15g}", "%.15f" when that is
+    // scientific, trailing zeros and point stripped
+    val cases = Seq(
+      6.02214076e+23 -> "602214075999999987023872",
+      556.4543226524335 -> "556.454322652433",
+      (0.1 + 0.2) -> "0.3",
+      1e16 -> "10000000000000000",
+      -2.5e+21 -> "-2500000000000000000000",
+      999999999999999.9 -> "999999999999999.875",
+      9.999999999999999e-05 -> "0.0001",
+      12345678.12345679 -> "12345678.1234568",
+      -1e-20 -> "-0", 5e-324 -> "0")
+    cases.foreach { case (v, expected) =>
+      assert(graft.functions.FloatFormat.formatString(v) == expected,
+        s"formatString($v)")
+      assert(evalDouble(formatFloat(col("v")), v) == expected,
+        s"formatFloat($v)")
+    }
+  }
+
   test("centsStr / microsSecondsStr exact integer rendering") {
     assert(evalDouble(centsStr(col("v")), 12.31) == "12.31")
     assert(evalDouble(centsStr(col("v")), 0.0) == "0.00")
